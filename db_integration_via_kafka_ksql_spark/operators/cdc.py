@@ -76,6 +76,16 @@ def compact_latest(
     return agg.select(*out_cols)
 
 
+def is_deleted(deleted_col: str) -> Column:
+    """The one delete test of the CDC path: the marker reads 'true' (a
+    string, as the reference keeps it, 01-movies-transform.sql:50, or a
+    boolean). NULL means live, so state, sink and the delete filter
+    always agree on a row with no marker."""
+    return F.coalesce(
+        F.col(deleted_col).cast("string") == F.lit("true"), F.lit(False)
+    )
+
+
 def soft_delete_filter(
     state: DataFrame,
     deleted_col: str = "__deleted",
@@ -88,7 +98,7 @@ def soft_delete_filter(
     the key from materialized state. Accepts string "true"/"false" (the
     reference keeps it a string, 01-movies-transform.sql:50) or boolean.
     """
-    cond = F.col(deleted_col).cast("string") != F.lit("true")
+    cond = ~is_deleted(deleted_col)
     if tombstone_col is not None:
         cond = cond & ~F.coalesce(F.col(tombstone_col), F.lit(False))
     return state.filter(cond)

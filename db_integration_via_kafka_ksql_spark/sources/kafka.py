@@ -43,6 +43,8 @@ import pandas as pd  # module-level so pandas_udf type hints resolve under
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from db_integration_via_kafka_ksql_spark.operators import cdc
+
 
 def kafka_available(spark: SparkSession) -> bool:
     """True if the Kafka source can actually be used in this session."""
@@ -161,7 +163,7 @@ def write_changelog(
         )
     from pyspark.sql.avro.functions import to_avro
 
-    is_del: Column = F.col(deleted_col).cast("string") == F.lit("true")
+    is_del: Column = cdc.is_deleted(deleted_col)
     payload_cols = [c for c in compacted.columns if c != deleted_col]
     return compacted.select(
         to_avro(F.struct(*[F.col(c) for c in payload_cols])).alias("_all_value"),
@@ -337,7 +339,7 @@ def write_changelog_py(
         return F.pandas_udf(encode_series, "binary")
 
     payload_cols = [c for c in compacted.columns if c != deleted_col]
-    is_del: Column = F.col(deleted_col).cast("string") == F.lit("true")
+    is_del: Column = cdc.is_deleted(deleted_col)
     return compacted.select(
         _encoder(key_schema, key_serde)(
             F.to_json(F.struct(*[F.col(c) for c in key_cols]))

@@ -118,12 +118,8 @@ class CdcPipeline:
         compacted = cdc.compact_latest(
             projected, key_cols=list(self.key_cols), order_cols=list(self.order_cols)
         ).localCheckpoint()  # computed once, consumed by up to 3 outputs
-        live = compacted.filter(
-            F.col(self.deleted_col).cast("string") != F.lit("true")
-        )
-        deleted = compacted.filter(
-            F.col(self.deleted_col).cast("string") == F.lit("true")
-        )
+        deleted = compacted.filter(cdc.is_deleted(self.deleted_col))
+        live = compacted.filter(~cdc.is_deleted(self.deleted_col))
         if self.state is not None:
             self.state.apply_batch(compacted)
         if self.sink is not None:

@@ -3,8 +3,8 @@
 The reference's queryable abstraction is the ksqlDB TABLE — RocksDB state
 rebuilt by topic replay (TOMBSTONE_HANDLING_GUIDE.md:77-113). We keep the
 same "log is the source of truth" stance (SURVEY §7.1) but materialize to
-parquet, so pull queries are plain DataFrame reads and rebuild = batch
-compaction from offset 0.
+parquet, so scans are plain DataFrame reads, a point pull query reads one
+bucket's files with pyarrow, and rebuild = batch compaction from offset 0.
 
 Scale: state size ~ unique keys (reference documents 1-2 KB/key). The
 parquet state is written partitioned-by-key-hash-bucket so the per-batch
@@ -16,14 +16,24 @@ commit points, mirroring ksqlDB's 2s commit interval).
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import json
 import os
 import shutil
+import time
 import uuid
 import warnings
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructType, TimestampType
 
+from db_integration_via_kafka_ksql_spark.functions import murmur3
 from db_integration_via_kafka_ksql_spark.operators import cdc
 from db_integration_via_kafka_ksql_spark.streaming import swapdir
 
@@ -44,17 +54,134 @@ def _safe_key_upcast(batch_type, state_type) -> bool:
     return False
 
 
+# a lookup that races a publish reads again, at most this many times
+_LOOKUP_ATTEMPTS = 4
+_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_NO_MATCH = object()
+
+
+def _parquet_files(directory: str) -> list[str]:
+    return [
+        os.path.join(directory, n)
+        for n in sorted(os.listdir(directory))
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+
+
+def _read_footer(path: str | None) -> pa.Schema:
+    if path is None:
+        raise FileNotFoundError("the state directory holds no data file")
+    return pq.read_schema(path)
+
+
+def _empty(arrow_schema: pa.Schema, schema: StructType) -> pa.Table:
+    # one empty chunk per column: createDataFrame fails on a nested
+    # column with no chunk at all
+    batch = pa.RecordBatch.from_pylist([], schema=arrow_schema)
+    return pa.Table.from_batches([batch]).select(schema.fieldNames())
+
+
+def _as_nullable(t):
+    """Spark's asNullable on a schema's JSON: file reads declare every
+    field, array element and map value nullable."""
+    if isinstance(t, list):
+        return [_as_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    t = {k: v if k == "metadata" else _as_nullable(v) for k, v in t.items()}
+    for flag in ("nullable", "containsNull", "valueContainsNull"):
+        if flag in t:
+            t[flag] = True
+    return t
+
+
+def _spark_schema(arrow_schema: pa.Schema, drop: str) -> StructType:
+    """The Spark schema a state file was written with (its footer's row
+    metadata, no Spark job), as `read()` sees it: every field nullable,
+    without the ``drop`` column."""
+    meta = (arrow_schema.metadata or {}).get(_ROW_METADATA)
+    if meta is None:
+        raise ValueError("state file footer carries no Spark row metadata")
+    fields = [f for f in _as_nullable(json.loads(meta))["fields"] if f["name"] != drop]
+    return StructType.fromJson({"type": "struct", "fields": fields})
+
+
+def _probe(value, dtype: DataType):
+    """The Python side of ``CAST(<literal> AS <stored key type>)``:
+    ``value`` as a value of ``dtype``, or _NO_MATCH when no stored key
+    can equal it (NULL, or a value that does not parse)."""
+    if value is None:
+        return _NO_MATCH
+    name = dtype.typeName()
+    try:
+        if name in _INT_WIDTH:
+            return int(value)
+        if name == "boolean":
+            if isinstance(value, str):
+                return {"true": True, "false": False}[value.strip().lower()]
+            return bool(value)
+        if name == "string":
+            if isinstance(value, bool):
+                return "true" if value else "false"
+            return str(value)
+        if name == "binary":
+            return value.encode() if isinstance(value, str) else bytes(value)
+        if name == "date":
+            if isinstance(value, str):
+                return datetime.date.fromisoformat(value)
+            return value.date() if isinstance(value, datetime.datetime) else value
+        if name in ("timestamp", "timestamp_ntz"):
+            if isinstance(value, str):
+                return datetime.datetime.fromisoformat(value)
+            if isinstance(value, datetime.datetime):
+                return value
+            return datetime.datetime.combine(value, datetime.time())
+        if name == "decimal":
+            return decimal.Decimal(str(value)).quantize(
+                decimal.Decimal(1).scaleb(-dtype.scale), rounding=decimal.ROUND_HALF_UP
+            )
+        if name in _FLOAT_WIDTH:
+            return float(value)
+    except (ValueError, TypeError, KeyError, OverflowError, decimal.InvalidOperation):
+        return _NO_MATCH
+    return value
+
+
+def _arrow_scalar(probe, dtype: DataType, field_type: pa.DataType) -> pa.Scalar:
+    if pa.types.is_timestamp(field_type):
+        # via Spark's internal microseconds: a naive datetime means the
+        # same instant here as in F.lit
+        micros = dtype.toInternal(probe)
+        return pa.scalar(micros, pa.timestamp("us", tz=field_type.tz)).cast(field_type)
+    return pa.scalar(probe, type=field_type)
+
+
+def _utc_timestamps(table: pa.Table, schema: StructType) -> pa.Table:
+    """pyarrow reads Spark's INT96 timestamps as naive UTC values; mark
+    them UTC so createDataFrame does not shift them by the session time
+    zone."""
+    for i, f in enumerate(schema.fields):
+        t = table.schema.field(i).type
+        if isinstance(f.dataType, TimestampType) and pa.types.is_timestamp(t) and t.tz is None:
+            table = table.set_column(
+                i, f.name, table.column(i).cast(pa.timestamp(t.unit, tz="UTC"))
+            )
+    return table
+
+
 class ParquetStateStore:
     """Keyed latest-state table backed by a parquet directory.
 
     Crash safety: every publish is the swapdir two-rename swap (stage,
     rename live -> __old_*, rename staged -> live, drop __old_*), and
-    every entry point (`exists`/`read`/`lookup`, hence `apply_batch`)
-    first runs swapdir recovery — if a crash struck inside the rename
-    window and left nothing at `path`, the newest `__old_*` survivor IS
-    the last published version and is restored before anything else
-    looks at the directory; stale `__old_*` (crash after publish,
-    before cleanup) and `__staging_*`/`__next_*` scratch dirs are swept.
+    `exists`/`read`/`destroy` (hence `apply_batch`) first run swapdir
+    recovery. `lookup` does not: a pull query is read-only and never
+    sweeps the scratch directories of a batch being written. If a crash
+    struck inside the rename window and left nothing at `path`, the
+    newest `__old_*` survivor IS the last published version and is
+    restored before anything else looks at the directory; stale
+    `__old_*` (crash after publish, before cleanup) and
+    `__staging_*`/`__next_*` scratch dirs are swept.
     Without the restore, `exists()` would return False after such a
     crash and the next apply_batch would silently reinitialize the
     entire state from one micro-batch.
@@ -90,6 +217,7 @@ class ParquetStateStore:
         self.evolve = evolve
         self.target_bucket_bytes = target_bucket_bytes
         self._rescale_advised = False
+        self._footer: pa.Schema | None = None  # lookup's schema cache
 
     _BUCKET = "__bucket"
 
@@ -112,35 +240,106 @@ class ParquetStateStore:
         return F.pmod(F.hash(*key_exprs), F.lit(self.n_buckets))
 
     def lookup(self, **key_values) -> DataFrame:
-        """Keyed point lookup that opens 1/n_buckets of the state.
+        """Pull query: the state row of one key, read by the driver with
+        no Spark job (ksqlDB's `SELECT * FROM table WHERE key = ...`,
+        which RocksDB serves from its own key index).
 
-        The state directory is hive-partitioned by key-hash bucket, and
-        the lookup filters on ``__bucket == pmod(hash(<literal key>), n)``
-        — Catalyst constant-folds the hash of literals, so the predicate
-        becomes a PartitionFilter and every other bucket directory is
-        skipped without opening a file (plan-asserted in
-        tests/test_streaming.py). This is the ksqlDB pull-query path
-        (`SELECT * FROM table WHERE key = ...`), which RocksDB serves
-        from its own key index; columnar state earns the same sublinear
-        read via directory pruning. n_buckets is part of the store's
-        on-disk identity — change it only with a rebuild."""
+        The key's bucket ``pmod(hash(key), n_buckets)`` is computed in
+        Python (functions/murmur3.py, Spark's murmur3 with seed 42), and
+        only the parquet files of ``__bucket=<b>`` are opened, by pyarrow
+        with a key-equality filter. The state schema comes from a file
+        footer. The answer comes back as a local DataFrame, which
+        collects as a LocalTableScan. Key types with no Python hash
+        (decimal, float, double, nested) are filtered the same way over
+        every bucket's files.
+
+        Read-only: no recovery runs, so a lookup never removes a writer's
+        scratch directories; a lookup that races a publish (a file it
+        listed is gone) reads again. n_buckets is part of the store's
+        on-disk identity: change it only with `rescale_buckets`."""
         missing = [k for k in self.key_cols if k not in key_values]
         if missing:
             raise ValueError(f"lookup requires all key cols; missing {missing}")
-        self._recover()
-        df = self.spark.read.parquet(self.path)
-        # murmur3 is TYPE-sensitive: hash(42 as int) != hash(42 as long),
-        # so each literal must probe as exactly the stored column's type
-        types = {f.name: f.dataType for f in df.schema.fields}
-        lits = {
-            k: F.lit(key_values[k]).cast(types[k]) for k in self.key_cols
-        }
-        cond = F.col(self._BUCKET) == self._bucket_of(
-            *[lits[k] for k in self.key_cols]
+        for attempt in range(_LOOKUP_ATTEMPTS):
+            try:
+                schema, table = self._point_read(key_values)
+                break
+            except FileNotFoundError:
+                if attempt == _LOOKUP_ATTEMPTS - 1:
+                    raise
+                time.sleep(0.02 * (attempt + 1))
+        return self.spark.createDataFrame(table, schema=schema)
+
+    def _state_files(self, buckets: list[str]):
+        """Every data file of the current version, bucket by bucket; the
+        flat layout of an empty state (`_write_atomic`) keeps its file at
+        the root."""
+        if not buckets:
+            yield from _parquet_files(self.path)
+        for b in buckets:
+            yield from _parquet_files(os.path.join(self.path, b))
+
+    def _point_read(self, key_values: dict) -> tuple[StructType, pa.Table]:
+        buckets = sorted(
+            e for e in os.listdir(self.path) if e.startswith(f"{self._BUCKET}=")
         )
-        for k in self.key_cols:
-            cond = cond & (F.col(k) == lits[k])
-        return df.filter(cond).drop(self._BUCKET)
+        # the footer seen last stands in for the schema until the footer
+        # of a file this lookup reads anyway confirms it, so a point
+        # lookup opens the files of its own bucket only
+        arrow_schema = self._footer
+        for _ in range(_LOOKUP_ATTEMPTS):
+            if arrow_schema is None:
+                arrow_schema = _read_footer(next(self._state_files(buckets), None))
+            schema = _spark_schema(arrow_schema, drop=self._BUCKET)
+            types = {f.name: f.dataType for f in schema.fields}
+            unknown = [k for k in self.key_cols if k not in types]
+            if unknown:
+                raise ValueError(f"lookup: key cols {unknown} are not in the state")
+            # murmur3 is TYPE-sensitive: hash(42 as int) != hash(42 as
+            # long), so each literal probes as the stored column's type
+            probes = [_probe(key_values[k], types[k]) for k in self.key_cols]
+            if any(p is _NO_MATCH for p in probes):
+                return schema, _empty(arrow_schema, schema)
+            key_types = [types[k].typeName() for k in self.key_cols]
+            if buckets and all(murmur3.hashable(t) for t in key_types):
+                internal = [
+                    int(p) if t == "boolean" else types[k].toInternal(p)
+                    for k, p, t in zip(self.key_cols, probes, key_types)
+                ]
+                b = murmur3.bucket(internal, key_types, self.n_buckets)
+                bucket_dir = os.path.join(self.path, f"{self._BUCKET}={b}")
+                paths = _parquet_files(bucket_dir) if os.path.isdir(bucket_dir) else []
+            else:
+                paths = list(self._state_files(buckets))
+            seen = _read_footer(paths[0] if paths else next(self._state_files(buckets), None))
+            if seen.equals(arrow_schema, check_metadata=True):
+                break
+            arrow_schema = seen
+        else:
+            raise FileNotFoundError("the state schema changed during the lookup")
+        self._footer = arrow_schema
+        cond, nested = None, []
+        for k, p in zip(self.key_cols, probes):
+            field_type = arrow_schema.field(k).type
+            try:
+                if pa.types.is_nested(field_type):
+                    # no Arrow equality kernel for nested values
+                    nested.append((k, pa.scalar(p, type=field_type).as_py()))
+                    continue
+                term = pc.field(k) == _arrow_scalar(p, types[k], field_type)
+            except (pa.ArrowInvalid, OverflowError, TypeError):
+                return schema, _empty(arrow_schema, schema)
+            cond = term if cond is None else cond & term
+        table = ds.dataset(paths, schema=arrow_schema, format="parquet").to_table(
+            columns=schema.fieldNames(), filter=cond
+        )
+        for k, want in nested:
+            table = table.filter(pa.array([v == want for v in table[k].to_pylist()], pa.bool_()))
+        if table.num_rows == 0:
+            return schema, _empty(arrow_schema, schema)
+        # one chunk: createDataFrame loses the rows of a table whose
+        # first chunks are empty (one per file the filter emptied)
+        return schema, _utc_timestamps(table.combine_chunks(), schema)
 
     @staticmethod
     def _carry(src: str, dst: str) -> None:
@@ -439,7 +638,7 @@ class ParquetStateStore:
         rule the bench's state_write_amplification section demonstrates:
         100k keys / 64 buckets and 1m / 640 write the same bytes per
         trigger). n_buckets is part of the on-disk identity (lookup
-        constant-folds pmod(hash, n)), so this is BY DESIGN a full
+        opens the directory pmod(hash, n)), so this is BY DESIGN a full
         rewrite — one range of maintenance downtime per decade of
         growth, published with the same atomic swap as every write.
         Safe against a crash at any point: the old layout stays live

@@ -241,6 +241,24 @@ def test_pull_queries_over_state(harness, spark):
     assert total.first()["total"] == 5
 
 
+def test_null_deleted_marker_is_live_in_state_and_sink(harness, spark):
+    """A change row with a NULL `__deleted` is an update, not a delete,
+    for the state and the sink alike: both keep the key at its new
+    value (cdc.is_deleted: NULL means live)."""
+    h = harness
+    pipe = CdcPipeline(
+        source=None, key_cols=["id"], order_cols=["offset"],
+        sink=h.sink, state=h.state,
+    )
+    pipe.process_batch(
+        spark.createDataFrame([(1, "a", "false", 1), (2, "b", "false", 2)], SCHEMA), 0
+    )
+    pipe.process_batch(spark.createDataFrame([(1, "a2", None, 3)], SCHEMA), 1)
+    state = {r["id"]: r["title"] for r in h.state.read().collect()}
+    sink = {k: r["title"] for k, r in h.sink_rows().items()}
+    assert state == sink == {1: "a2", 2: "b"}
+
+
 def test_dead_letter_rows_never_reach_state_or_sink(harness, spark):
     """K5 end-to-end: a poison record (__dead=true) at the HIGHEST offset
     must not win compaction — it goes to the dead-letter handler, and the
@@ -468,17 +486,19 @@ def test_state_store_evolves_on_added_column(spark, tmp_path):
 
 
 def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
-    """The pull-query point lookup must hit ONE bucket directory: the
-    constant-folded hash filter shows up as a PartitionFilter on the
-    scan, and results match a full-scan filter."""
-    from db_integration_via_kafka_ksql_spark.plans.audit import audit
+    """The pull-query point lookup opens ONE bucket directory and runs
+    no Spark job. It is checked on I/O, not plan shape (the lookup reads
+    the bucket with pyarrow, so there is no Spark scan to inspect): a
+    fresh store answers with every other bucket's files moved aside, a
+    warm store answers with every other bucket's files overwritten with
+    garbage, both equal to the full-scan filter, and `collect()` adds no
+    job to the status tracker."""
+    import os
+    import shutil
 
+    path = str(tmp_path / "state")
     store = ParquetStateStore(
-        spark,
-        str(tmp_path / "state"),
-        key_cols=["id"],
-        order_cols=["offset"],
-        n_buckets=8,
+        spark, path, key_cols=["id"], order_cols=["offset"], n_buckets=8
     )
     rows = [(i, f"p{i}", "false", i) for i in range(1, 201)]
     store.apply_batch(
@@ -486,19 +506,37 @@ def test_point_lookup_prunes_to_one_bucket(spark, tmp_path):
             rows, "id long, payload string, __deleted string, offset long"
         )
     )
-    hit = store.lookup(id=42)
-    got = hit.collect()
-    assert len(got) == 1 and got[0]["payload"] == "p42"
-    # and equals the naive full-scan answer
-    assert (
-        store.read().filter("id = 42").collect()[0]["payload"] == "p42"
+    want = store.read().filter("id = 42").collect()
+    assert len(want) == 1 and want[0]["payload"] == "p42"
+    tracker = spark.sparkContext.statusTracker()
+    jobs0 = set(tracker.getJobIdsForGroup())
+    got = store.lookup(id=42).collect()
+    assert set(tracker.getJobIdsForGroup()) == jobs0  # 0 Spark jobs
+    assert got == want
+    target = "__bucket=%d" % spark.read.parquet(path).filter("id = 42").first()["__bucket"]
+    others = [
+        os.path.join(path, d, f)
+        for d in os.listdir(path)
+        if d.startswith("__bucket=") and d != target
+        for f in os.listdir(os.path.join(path, d))
+    ]
+    assert len(others) >= 7
+    # warm store: a read of any other bucket's file would now fail
+    for f in others:
+        with open(f, "wb") as out:
+            out.write(b"not a parquet file")
+    assert store.lookup(id=42).collect() == want
+    # fresh store (no footer seen yet): other buckets' files moved aside
+    aside = tmp_path / "aside"
+    aside.mkdir()
+    for i, f in enumerate(others):
+        shutil.move(f, aside / f"{i}.parquet")
+    fresh = ParquetStateStore(
+        spark, path, key_cols=["id"], order_cols=["offset"], n_buckets=8
     )
-    # plan: the bucket predicate reached the scan's PartitionFilters
-    rep = audit(hit)
-    scan = next(iter(rep.scans.values()))
-    assert scan.partition_filters, rep.plan_text[:2000]
+    assert fresh.lookup(id=42).collect() == want
     # miss: absent key in the pruned bucket returns empty, not error
-    assert store.lookup(id=99999).count() == 0
+    assert fresh.lookup(id=99999).collect() == []
 
 
 def test_state_store_survives_going_empty(spark, tmp_path):
